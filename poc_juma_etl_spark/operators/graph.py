@@ -355,10 +355,7 @@ def triangle_top(li: DataFrame, top: int = TRI_TOP) -> DataFrame:
 # the closing edge. Every join keys on (brand, node) or (brand, u, v);
 # nothing driver-side, no UDFs.
 
-TRI_TOP = 25  # one row per brand at every SF
-
-
-def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_graph_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle census over the within-brand co-purchase graph:
     (brand, n_nodes, n_edges, n_wedges, n_triangles, closed_x3) with
     closed_x3 = 3 * n_triangles (the closed-wedge numerator as an exact
@@ -461,7 +458,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRIANGLES_ORACLE = """
+BRAND_TRIANGLES_ORACLE = """
     WITH lb AS MATERIALIZED (
       SELECT l_orderkey, p_brand AS brand, l_partkey
       FROM lineitem JOIN part ON l_partkey = p_partkey

@@ -53,7 +53,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import load_table
 from ..checkpoint import truncate_lineage
-from .queries import register
+from .queries import register, scoped_cache
 
 BFS_SEEDS = 3
 BFS_MAX_HOPS = 4
@@ -94,105 +94,62 @@ DPP_YEAR = 1996
     doc=f"Multi-source BFS over the part co-purchase graph: hop distance "
     f"from the {BFS_SEEDS} smallest part ids, capped at {BFS_MAX_HOPS} hops. "
     "Spark runs the frontier algorithm — each round joins ONLY the newest "
-    "frontier against the (checkpointed-once) symmetric edge list, "
+    "frontier against the symmetric edge view of a cached adjacency list, "
     "anti-joins already-settled nodes, and stops early on an empty "
     "frontier — so per-round shuffle volume tracks the frontier's "
     "adjacency, not the graph (the Pregel shape; O(diameter) rounds). "
-    "Edges are built from bounded per-order baskets in-row, never a "
-    "lineitem self-join. The oracle reaches the same distances via a "
+    "The adjacency list is built once (part_graph, shared with "
+    "q_graph_kcore): each multi-part order basket emits per-part neighbour "
+    "arrays in-row, collapsed by one groupBy — never a lineitem self-join "
+    "or a pair-distinct shuffle. The oracle reaches the same distances via a "
     "depth-bounded recursive-CTE walk with MIN(depth) per node — a "
     "different algorithm arriving at the same fixpoint.",
     tags=("graph", "bfs", "iterative"),
 )
 def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries import scoped_cache
+    sym, _ = part_graph(load_table(spark, sf_dir, "lineitem"))
+    return bfs_hops(sym, n_seeds=BFS_SEEDS, max_hops=BFS_MAX_HOPS)
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
+
+def part_graph(li: DataFrame) -> tuple[DataFrame, int]:
+    """(sym, n_nodes): the part co-purchase graph of ``lineitem`` as a
+    SYMMETRIC, DISTINCT (u, v) edge view plus its node count. Shared by
+    q_graph_kcore and q_graph_bfs_hops.
+
+    Round-13 adjacency recut (guide §2.3 "shuffle compressed state, not
+    pairs"): each multi-part basket emits one neighbour-complement ARRAY
+    per part, and one groupBy(u) collapses them into a cached adjacency
+    list — candidate pairs never materialize as a distinct edge table (the
+    pair-distinct shuffle was a full pass over a 99.7%-unique stream at
+    sf0.1). The exploded view comes out hash-partitioned on u, the layout
+    kcore's degree count wants. Single-part baskets are dropped before the
+    explode, so every adjacency row has a neighbour and the node universe
+    is exactly the edge endpoints — the set both oracles count."""
+    baskets = (
+        li.groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+        .filter(F.size("parts") > 1)
     )
-    # Round-13 (the kcore adjacency recut, guide §2.3 "shuffle compressed
-    # state, not pairs"): per-basket neighbor-complement ARRAYS shuffle once
-    # into a cached symmetric adjacency list — candidate pairs never
-    # materialize as a distinct edge table (the pair-distinct shuffle was a
-    # full pass over a 99.7%-unique stream at sf0.1). The exploded view is
-    # the same symmetric distinct edge set bfs_hops' own dedup produced.
     per_basket = baskets.select(
         F.explode(
             F.expr("transform(parts, x -> struct(x AS u, filter(parts, y -> y != x) AS vs))")
         ).alias("p")
     ).select("p.u", "p.vs")
     adj = scoped_cache(
-        per_basket.groupBy(F.col("u").cast("bigint").alias("u")).agg(
-            F.expr("array_distinct(flatten(collect_list(vs)))").alias("nbrs")
+        per_basket.groupBy("u").agg(
+            F.array_distinct(F.flatten(F.collect_list("vs"))).alias("nbrs")
         )
     )
-    adj.count()  # materialize once; rounds read the columnar cache
-    sym = adj.select("u", F.explode("nbrs").alias("v")).select(
-        "u", F.col("v").cast("bigint").alias("v")
-    )
-    return bfs_hops(sym, n_seeds=BFS_SEEDS, max_hops=BFS_MAX_HOPS, sym_ready=True)
+    n_nodes = adj.count()  # fills the cache; rounds read the columnar copy
+    return adj.select("u", F.explode("nbrs").alias("v")), n_nodes
 
 
-def bfs_hops(
-    pairs: DataFrame, n_seeds: int, max_hops: int, sym_ready: bool = False
-) -> DataFrame:
+def bfs_hops(sym: DataFrame, n_seeds: int, max_hops: int) -> DataFrame:
     """(node, hops) for every node within ``max_hops`` of the ``n_seeds``
-    smallest node ids in the undirected graph ``pairs`` (u, v). Pure
-    DataFrame iteration — the driver sees only per-round emptiness checks,
-    never node or edge data. ``sym_ready=True``: the caller already supplies
-    a SYMMETRIC, DISTINCT, bigint, cache-backed edge view (the round-13
-    adjacency recut) — skip the dedup/cache/mirror prelude."""
-    if sym_ready:
-        sym = pairs
-        seeds = (
-            sym.select(F.col("u").alias("node"))
-            .distinct()
-            .orderBy("node")
-            .limit(n_seeds)
-        )
-        dist = truncate_lineage(seeds.withColumn("hops", F.lit(0).cast("int")))
-        frontier = dist.select("node")
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(sym, frontier.node == sym.u)
-                .select(F.col("v").alias("node"))
-                .distinct()
-                .join(dist, "node", "left_anti")
-                .withColumn("hops", F.lit(h).cast("int"))
-            )
-            nxt = truncate_lineage(nxt)
-            if nxt.isEmpty():
-                break
-            dist = dist.union(nxt)
-            frontier = nxt.select("node")
-        return dist.orderBy("node")
-    # One materialization of the distinct pair set: it feeds every round,
-    # and without it each frontier join would re-execute the basket
-    # pair-generation lineage — O(rounds) corpus passes at 100 TB. The
-    # mirrored halves can't collide (pairs hold u < v), so the union needs
-    # no distinct — that'd be a full extra shuffle of the edge list.
-    # Round-10 recut: CACHE the half-size pair set and derive the
-    # symmetric view lazily, instead of localCheckpointing the full
-    # mirrored list. Two wins, both measured at sf1: (a) the materialized
-    # footprint halves (each round's join scans the cache twice via the
-    # union — same bytes read as one scan of a double-size checkpoint);
-    # (b) scoped_cache releases the blocks deterministically when the
-    # harness finishes the query, where localCheckpoint blocks lingered
-    # until JVM GC — a second same-session BFS run degraded 56s -> 85s
-    # from dead-block pressure before this change. Per-round joins still
-    # broadcast the frontier (AQE BuildLeft), so edge bytes never cross a
-    # per-round Exchange either way; on a real cluster this persist is
-    # DISK_ONLY-eligible.
-    from .queries import scoped_cache
-
-    dd = scoped_cache(
-        pairs.select(
-            F.col("u").cast("bigint").alias("u"), F.col("v").cast("bigint").alias("v")
-        ).distinct()
-    )
-    dd.count()  # materialize once; rounds read the columnar cache
-    sym = dd.union(dd.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    smallest node ids in the undirected graph given as a SYMMETRIC,
+    DISTINCT (u, v) edge view (``part_graph``'s shape; cache-backed, so
+    rounds never re-run its lineage). Pure DataFrame iteration — the driver
+    sees only per-round emptiness checks, never node or edge data."""
     seeds = (
         sym.select(F.col("u").alias("node")).distinct().orderBy("node").limit(n_seeds)
     )

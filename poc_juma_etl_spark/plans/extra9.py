@@ -40,6 +40,7 @@ from pyspark.sql.window import Window
 from ..catalog import load_table
 from ..checkpoint import truncate_lineage
 from ..operators.text import SQL_MD5_LONG, md5_long, tokens
+from .extra8 import part_graph
 from .queries import register, scoped_cache
 
 SPAN_K = 8  # duplicated-run granularity: report runs of >= 8 shared tokens
@@ -986,39 +987,12 @@ def _kcore_sql() -> str:
     tags=("graph", "kcore", "iterative"),
 )
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
-    )
-    # Round-13 representation recut (the verdict's item 4; guide §2.3/§2.4):
-    # candidate pairs never materialize as a DISTINCT edge table. Both
-    # directions of every in-basket pair are emitted in-row and collapse
-    # straight into a cached ADJACENCY LIST — one groupBy(u) whose map-side
-    # collect_set already dedupes, replacing the old chain of pair-distinct
-    # shuffle → symmetric union → localCheckpoint rewrite (the 2.4M-row edge
-    # table crossed three exchanges before the peel even started; sf0.1
-    # probe: 99.7% of raw pairs were already unique, so the distinct was a
-    # full shuffle for nothing). The exploded view of the cached adjacency
-    # feeds kcore_peel ALREADY hash-partitioned on u — exactly the layout
-    # its round-1 degree count and delta rounds want. Values identical: the
-    # edge set is the same symmetric distinct set; node universe = adjacency
-    # row count (every edge endpoint, as before). Earlier measured
-    # rejections stand unchanged and still apply to this shape: the BFS
+    # Measured rejections that still apply to part_graph's shape: the BFS
     # half-size-cache idiom (r11, 0.43x at sf1) and the degree-upper-bound
-    # prefilter (r12, 0.82-0.83x both shapes, tools/ab_kcore_prefilter.py).
-    per_basket = baskets.select(
-        F.explode(
-            F.expr("transform(parts, x -> struct(x AS u, filter(parts, y -> y != x) AS vs))")
-        ).alias("p")
-    ).select("p.u", "p.vs")
-    adj = scoped_cache(
-        per_basket.groupBy("u").agg(
-            F.array_distinct(F.flatten(F.collect_list("vs"))).alias("nbrs")
-        )
-    )
-    n_nodes = adj.count()  # materializes the cache; this IS the node universe
-    sym = adj.select("u", F.explode("nbrs").alias("v"))
-    return kcore_peel(spark, sym, KCORE_K, KCORE_ROUNDS, n_nodes=n_nodes)
+    # prefilter (r12, 0.82-0.83x both shapes; its A/B script,
+    # tools/ab_kcore_prefilter.py, is in git history).
+    sym, n_nodes = part_graph(load_table(spark, sf_dir, "lineitem"))
+    return kcore_peel(spark, sym, KCORE_K, KCORE_ROUNDS, n_nodes)
 
 
 def kcore_peel(
@@ -1026,14 +1000,14 @@ def kcore_peel(
     sym: DataFrame,
     k: int,
     max_rounds: int,
+    n_nodes: int,
     recut_threshold: float = 0.5,
-    n_nodes: int | None = None,
 ) -> DataFrame:
     """Exactly ``max_rounds`` k-core peels over a SYMMETRIC edge list
-    (u, v) — the delta-peeling engine behind q_graph_kcore, factored so
-    units can pin the incremental-degree math against brute force on
-    adversarial synthetic graphs (cascading removals, zero-degree
-    survivors) that the fixture's K never exercises.
+    (u, v) with ``n_nodes`` distinct endpoints — the delta-peeling engine
+    behind q_graph_kcore, factored so units can pin the incremental-degree
+    math against brute force on adversarial synthetic graphs (cascading
+    removals, zero-degree survivors) that the fixture's K never exercises.
 
     ``recut_threshold`` (round-9, the pagerank measured-switch idiom
     applied to the cache): once the alive-node count falls below
@@ -1047,11 +1021,6 @@ def kcore_peel(
     incremental degree table is the state; the cache only ever loses
     edges incident to already-removed nodes, whose decrements can no
     longer reach an alive row."""
-    # n_nodes: callers that PREFILTER the edge list (drop edges between two
-    # provably-sub-k nodes) must pass the true node-universe count — such a
-    # node can vanish from sym entirely yet still belongs in round 1's
-    # alive-then-removed accounting.
-    prev_n = sym.select("u").distinct().count() if n_nodes is None else n_nodes
     # -- round 1: bulk peel (most nodes die here at any K worth peeling) --
     deg0 = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     surv = deg0.filter(F.col("d") >= k).select(F.col("u").alias("node"))
@@ -1070,7 +1039,7 @@ def kcore_peel(
     )
     alive_edges.count()  # materialize so the planner sees the final partitioning
     n_surv = surv.count()
-    rounds = [(1, prev_n - n_surv, n_surv)]
+    rounds = [(1, n_nodes - n_surv, n_surv)]
     prev_n = n_surv
     nodes_at_cut = n_surv  # alive count when the edge cache was last re-cut
     # deg_1: degree among survivors — LEFT join keeps zero-degree survivors

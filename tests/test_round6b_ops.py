@@ -21,12 +21,14 @@ from poc_juma_etl_spark.plans.extra8 import (
 from .conftest import SF_ORACLE, SF_SMOKE
 
 
+def _sym(spark, und):
+    """bfs_hops takes a symmetric distinct edge view: mirror u < v pairs."""
+    return spark.createDataFrame(und + [(v, u) for u, v in und], "u bigint, v bigint")
+
+
 def test_bfs_tiny_graph_exact_distances(spark):
     # path 1-2-3-4-5-6 plus shortcut 1-4; seeds = {1, 2, 3}
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (1, 4), (100, 101)],
-        "u bigint, v bigint",
-    )
+    edges = _sym(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (1, 4), (100, 101)])
     got = {r["node"]: r["hops"] for r in bfs_hops(edges, n_seeds=3, max_hops=4).collect()}
     # 1,2,3 at 0; 4 at 1 (via 1-4 or 3-4); 5 at 2; 6 at 3; 100/101 unreachable
     assert got == {1: 0, 2: 0, 3: 0, 4: 1, 5: 2, 6: 3}
@@ -37,7 +39,7 @@ def test_bfs_hop_cap_and_early_stop(spark):
     # from 2? no: chain 0-1-2-3-4-5-6-7-8-9, seeds 0,1,2 -> 9 is 7 hops
     # beyond the cap of 4 and must be absent; max emitted hop == 4
     chain = [(i, i + 1) for i in range(9)]
-    edges = spark.createDataFrame(chain, "u bigint, v bigint")
+    edges = _sym(spark, chain)
     rows = bfs_hops(edges, n_seeds=3, max_hops=4).collect()
     got = {r["node"]: r["hops"] for r in rows}
     assert max(got.values()) == 4
@@ -48,9 +50,7 @@ def test_bfs_hop_cap_and_early_stop(spark):
 def test_bfs_isolated_seed_component_stops_early(spark):
     # the 3 smallest nodes form a closed triangle; frontier empties after
     # round 1 and nothing outside the component is ever emitted
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (50, 60), (60, 70)], "u bigint, v bigint"
-    )
+    edges = _sym(spark, [(1, 2), (2, 3), (1, 3), (50, 60), (60, 70)])
     rows = bfs_hops(edges, n_seeds=3, max_hops=4).collect()
     assert {r["node"] for r in rows} == {1, 2, 3}
     assert all(r["hops"] == 0 for r in rows)

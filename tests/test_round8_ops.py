@@ -10,9 +10,13 @@
    IS a duplicate).
 """
 
+import pytest
+
 from poc_juma_etl_spark import all_queries
+from poc_juma_etl_spark.plans.queries import release_caches
 
 from .test_round7_ops import _dup_docs_dir
+from .test_triangles import _write_fixture
 
 
 def _span_bruteforce(docs, k):
@@ -147,7 +151,7 @@ def test_kcore_delta_peeling_matches_bruteforce(spark):
 
     sym_rows = [(a, b) for a, b in und] + [(b, a) for a, b in und]
     sym = spark.createDataFrame(sym_rows, "u long, v long")
-    got = kcore_peel(spark, sym, K, R).collect()
+    got = kcore_peel(spark, sym, K, R, len(set().union(*edges))).collect()
     got_rounds = [(r.round, r.n_removed, r.n_remaining) for r in got]
     assert got_rounds == want_rounds
     assert got[0].core_size == len(want_core)
@@ -173,7 +177,7 @@ def test_kcore_zero_degree_survivor_counted_one_round(spark):
     sym = spark.createDataFrame(
         [(a, b) for a, b in und] + [(b, a) for a, b in und], "u long, v long"
     )
-    got = kcore_peel(spark, sym, K, R).collect()
+    got = kcore_peel(spark, sym, K, R, len(set().union(*edges))).collect()
     assert [(r.round, r.n_removed, r.n_remaining) for r in got] == want_rounds
     assert got[0].core_size == len(want_core)
 
@@ -206,19 +210,40 @@ def test_kcore_peel_property_random_graphs(spark):
             [(a, b) for a, b in edges] + [(b, a) for a, b in edges],
             "u long, v long",
         )
-        got = kcore_peel(spark, sym, k, R).collect()
+        n = len(set().union(*edges))
+        got = kcore_peel(spark, sym, k, R, n).collect()
         assert [(r.round, r.n_removed, r.n_remaining) for r in got] == want_rounds
         assert got[0].core_size == len(want_core)
         assert got[0].core_id_sum == sum(want_core)
         # r9: a forced edge-cache re-cut after EVERY shrinking round must
         # be trace-invisible (the cache only ever loses edges incident to
         # removed nodes — recut_threshold tunes cost, never results)
-        got2 = kcore_peel(spark, sym, k, R, recut_threshold=1.1).collect()
+        got2 = kcore_peel(spark, sym, k, R, n, recut_threshold=1.1).collect()
         assert [(r.round, r.n_removed, r.n_remaining) for r in got2] == want_rounds
         assert got2[0].core_size == len(want_core)
         assert got2[0].core_id_sum == sum(want_core)
 
     check()
+
+
+@pytest.mark.parametrize("name", ["q_graph_kcore", "q_graph_bfs_hops"])
+def test_part_graph_node_universe_is_edge_endpoints(spark, tmp_path, name):
+    """A part bought only in one-part orders has no co-purchase edge, so
+    it is not a node: both oracles count edge endpoints only. Parts 1-4
+    form the path 1-2-3-4; part 99 only ever ships alone."""
+    import duckdb
+
+    rows = [(1, 1), (1, 2), (2, 2), (2, 3), (3, 3), (3, 4), (4, 99)]
+    _write_fixture(spark, tmp_path, rows, {p: "Brand#11" for p in (1, 2, 3, 4, 99)})
+    spec = all_queries()[name]
+    got = [tuple(r) for r in spec.fn(spark, str(tmp_path)).collect()]
+    release_caches()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/lineitem.parquet/*.parquet')"
+    )
+    assert got == [tuple(r) for r in con.execute(spec.oracle).fetchall()]
 
 
 def test_plan_output_groups_property_random_sizes(spark):

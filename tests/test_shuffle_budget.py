@@ -158,27 +158,19 @@ QUEUE_BUDGETS = {
     "etl_mp3_file_probe_e2e": 25_000,
     "q_multimodal_tar_ingest": 45_000,
     "etl_tar_shard_ingest_e2e": 25_000,
-    # gzip JSONL round-trip: the repartition(8) staging shuffle of the
-    # document corpus + the bucket rollup; measured 101.6 KB
-    "etl_jsonl_gzip_roundtrip_e2e": 220_000,
-    # XML round-trip: one brand rollup exchange; measured 3.1 KB
-    "etl_xml_roundtrip_e2e": 8_000,
     # round-14 candidates (measured 2026-08, round 12, same rig/protocol):
-    # triangle census 1.45 MB (edge distinct + degree/orientation joins —
-    # scales with the co-occurrence edge list); naive Bayes 23.6 KB (model
-    # aggregations + token-key scoring joins); bloom prefilter 19.9 KB
-    # (build distinct + verification join; the filter itself never enters
-    # an Exchange — it ships as a literal)
-    "q_graph_triangles": 3_000_000,
+    # per-brand triangle census 1.45 MB (edge distinct + degree/orientation
+    # joins — scales with the co-occurrence edge list); naive Bayes 23.6 KB
+    # (model aggregations + token-key scoring joins)
+    "q_graph_brand_triangles": 3_000_000,
     "q_ml_naive_bayes_langid": 60_000,
-    "q_join_bloom_prefilter": 45_000,
     # zipf/hapax spectrum 32.6 KB (uni+bigram type frequency exchange)
     "q_text_zipf_profile": 70_000,
 }
 
 
 def _queue_fn(name):
-    from poc_juma_etl_spark.operators.graph import q_graph_triangles
+    from poc_juma_etl_spark.operators.graph import q_graph_brand_triangles
     from poc_juma_etl_spark.operators.lm import q_ml_naive_bayes_langid
     from poc_juma_etl_spark.operators.text import q_text_zipf_profile
     from poc_juma_etl_spark.operators.mp3 import (
@@ -189,23 +181,15 @@ def _queue_fn(name):
         etl_tar_shard_ingest_e2e,
         q_multimodal_tar_ingest,
     )
-    from poc_juma_etl_spark.plans.extra11 import (
-        etl_jsonl_gzip_roundtrip_e2e,
-        etl_xml_roundtrip_e2e,
-    )
-    from poc_juma_etl_spark.plans.extra12 import q_join_bloom_prefilter
 
     return {
-        "q_graph_triangles": q_graph_triangles,
+        "q_graph_brand_triangles": q_graph_brand_triangles,
         "q_text_zipf_profile": q_text_zipf_profile,
         "q_ml_naive_bayes_langid": q_ml_naive_bayes_langid,
-        "q_join_bloom_prefilter": q_join_bloom_prefilter,
         "q_multimodal_mp3_probe": q_multimodal_mp3_probe,
         "etl_mp3_file_probe_e2e": etl_mp3_file_probe_e2e,
         "q_multimodal_tar_ingest": q_multimodal_tar_ingest,
         "etl_tar_shard_ingest_e2e": etl_tar_shard_ingest_e2e,
-        "etl_jsonl_gzip_roundtrip_e2e": etl_jsonl_gzip_roundtrip_e2e,
-        "etl_xml_roundtrip_e2e": etl_xml_roundtrip_e2e,
     }[name]
 
 

@@ -6,7 +6,10 @@ from itertools import combinations
 
 import pytest
 
-from poc_juma_etl_spark.operators.graph import TRIANGLES_ORACLE, q_graph_triangles
+from poc_juma_etl_spark.operators.graph import (
+    BRAND_TRIANGLES_ORACLE,
+    q_graph_brand_triangles,
+)
 
 from .conftest import SF_ORACLE
 
@@ -83,7 +86,7 @@ def _orders_for_edges(brand_edges):
 def test_triangle_census_vs_bruteforce(spark, tmp_path, edges):
     rows = _orders_for_edges({"Brand#1": edges})
     _write_fixture(spark, tmp_path, rows, {p: "Brand#1" for _, p in rows})
-    got = q_graph_triangles(spark, str(tmp_path)).collect()
+    got = q_graph_brand_triangles(spark, str(tmp_path)).collect()
     assert len(got) == 1
     r = got[0]
     n, e, w, t = _census(edges)
@@ -102,17 +105,17 @@ def test_triangle_census_brand_isolation(spark, tmp_path):
     rows += [(9999, 2), (9999, 11)]
     brand = {p: ("A" if p < 10 else "B") for _, p in rows}
     _write_fixture(spark, tmp_path, rows, brand)
-    got = {r.brand: r for r in q_graph_triangles(spark, str(tmp_path)).collect()}
+    got = {r.brand: r for r in q_graph_brand_triangles(spark, str(tmp_path)).collect()}
     assert got["A"].n_triangles == 1 and got["B"].n_triangles == 0
     assert got["B"].n_wedges == 1
 
 
 def test_triangle_census_oracle_parity(spark, duck):
-    got = [tuple(r) for r in q_graph_triangles(spark, SF_ORACLE).collect()]
-    exp = [tuple(r) for r in duck.execute(TRIANGLES_ORACLE).fetchall()]
+    got = [tuple(r) for r in q_graph_brand_triangles(spark, SF_ORACLE).collect()]
+    exp = [tuple(r) for r in duck.execute(BRAND_TRIANGLES_ORACLE).fetchall()]
     assert got == exp and len(got) > 0
 
 
 def test_triangle_census_empty_input(spark, tmp_path):
     _write_fixture(spark, tmp_path, [], {})
-    assert q_graph_triangles(spark, str(tmp_path)).collect() == []
+    assert q_graph_brand_triangles(spark, str(tmp_path)).collect() == []

@@ -1,6 +1,6 @@
-"""Dump .explain('formatted') for named queries to plans/r13/<query>_<tag>.txt.
+"""Dump .explain('formatted') for named queries to plans/<round>/<query>_<tag>.txt.
 
-    python tools/dump_plan_r13.py before q_graph_pagerank q_ann_pq_topk ...
+    python tools/dump_plan.py r13 before q_graph_pagerank q_ann_pq_topk ...
 
 Run at sf0.1 (the bench SF) so AQE/size-dependent choices match the bench.
 """
@@ -16,16 +16,15 @@ sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    rnd, tag, *names = sys.argv[1:]
     sf_dir = "/root/testdata/sf0.1"
     from poc_juma_etl_spark import all_queries
     from poc_juma_etl_spark.session import get_spark
     from poc_juma_etl_spark.plans.queries import release_caches
 
     specs = all_queries()
-    spark = get_spark("plan-dump-r13")
-    out_dir = REPO / "plans" / "r13"
+    spark = get_spark(f"plan-dump-{rnd}")
+    out_dir = REPO / "plans" / rnd
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = specs[name].fn(spark, sf_dir)

@@ -1,9 +1,9 @@
 """sf1 re-soak for the registration QUEUE (r10 verdict #2: keep the
 queue's soak evidence fresh each round so every drain stays a one-commit
-registry edit). Covers the round-13 queue (six format gates built r11)
-and the round-14 queue (triangle census, naive Bayes, bloom prefilter,
-built r12), each with full Spark-vs-DuckDB value parity against the
-replicated sf1 fixture; prints wall times — the same evidence the
+registry edit). Covers the round-13 queue (four format gates built r11)
+and the round-14 queue (per-brand triangle census, naive Bayes, zipf
+profile, built r12), each with full Spark-vs-DuckDB value parity against
+the replicated sf1 fixture; prints wall times — the same evidence the
 on-arrival rule records for registered gates.
 
 Usage: SPARK_GRAFT_DRIVER_MEM=64g python tools/soak_queue.py [sf_dir] [names...]
@@ -35,8 +35,8 @@ def main() -> int:
         con.execute(f"CREATE VIEW {p.stem} AS SELECT * FROM '{p}'")
 
     from poc_juma_etl_spark.operators.graph import (
-        TRIANGLES_ORACLE,
-        q_graph_triangles,
+        BRAND_TRIANGLES_ORACLE,
+        q_graph_brand_triangles,
     )
     from poc_juma_etl_spark.operators.lm import (
         NB_LANGID_ORACLE,
@@ -58,16 +58,6 @@ def main() -> int:
         etl_tar_shard_ingest_e2e,
         q_multimodal_tar_ingest,
     )
-    from poc_juma_etl_spark.plans.extra11 import (
-        JSONL_GZ_ORACLE,
-        XML_ROUNDTRIP_ORACLE,
-        etl_jsonl_gzip_roundtrip_e2e,
-        etl_xml_roundtrip_e2e,
-    )
-    from poc_juma_etl_spark.plans.extra12 import (
-        bloom_prefilter_oracle_sql,
-        q_join_bloom_prefilter,
-    )
 
     jobs = [
         # round-13 queue (format gates, built r11)
@@ -75,12 +65,9 @@ def main() -> int:
         ("etl_mp3_file_probe_e2e", etl_mp3_file_probe_e2e, MP3_FILE_ORACLE),
         ("q_multimodal_tar_ingest", q_multimodal_tar_ingest, TAR_ORACLE),
         ("etl_tar_shard_ingest_e2e", etl_tar_shard_ingest_e2e, TAR_SHARD_ORACLE),
-        ("etl_jsonl_gzip_roundtrip_e2e", etl_jsonl_gzip_roundtrip_e2e, JSONL_GZ_ORACLE),
-        ("etl_xml_roundtrip_e2e", etl_xml_roundtrip_e2e, XML_ROUNDTRIP_ORACLE),
         # round-14 queue (built r12)
-        ("q_graph_triangles", q_graph_triangles, TRIANGLES_ORACLE),
+        ("q_graph_brand_triangles", q_graph_brand_triangles, BRAND_TRIANGLES_ORACLE),
         ("q_ml_naive_bayes_langid", q_ml_naive_bayes_langid, NB_LANGID_ORACLE),
-        ("q_join_bloom_prefilter", q_join_bloom_prefilter, bloom_prefilter_oracle_sql()),
         ("q_text_zipf_profile", q_text_zipf_profile, ZIPF_PROFILE_ORACLE),
     ]
     if len(sys.argv) > 2:
