@@ -56,6 +56,7 @@ def run_table(
     range *loop*; the loop existed only to bound API payloads (its range
     helpers remain available for connector-backed sources).
     """
+    t0 = time.perf_counter()
     log = setup_service_logger(name, log_dir) if log_dir else None
     if log:
         log.info("load start: mode=%s historical=%s", SERVICE_MAP[name].load_mode, historical)
@@ -65,7 +66,7 @@ def run_table(
     if spec.load_mode == "overwrite":
         overwrite_table(df, path, spec.filter_field, spec.partition_granularity)
         if log:
-            log.info("load done: overwrite -> %s", path)
+            log.info("load done: overwrite -> %s secs=%.2f", path, time.perf_counter() - t0)
         return path
     # range_replace fact load
     if historical is None:
@@ -79,22 +80,20 @@ def run_table(
             if log:
                 log.info("load skipped: empty source")
             return path
-        replace_range(spark, path, df, spec.filter_field, lo, hi, spec.partition_granularity)
-        if log:
-            log.info("load done: range_replace [%s, %s] -> %s", lo, hi, path)
-        return path
-    ranges = (
-        monthly_ranges(*historical) if spec.range_type == "monthly" else daily_ranges(*historical)
-    )
-    # One atomic replacement across the whole historical window; the
-    # generated ranges bound *connector* batches, not Spark jobs.
-    replace_range(
-        spark, path, df, spec.filter_field, ranges[0][0], ranges[-1][1],
-        spec.partition_granularity,
-    )
+    else:
+        ranges = (
+            monthly_ranges(*historical)
+            if spec.range_type == "monthly"
+            else daily_ranges(*historical)
+        )
+        # One atomic replacement across the whole historical window; the
+        # generated ranges bound *connector* batches, not Spark jobs.
+        lo, hi = ranges[0][0], ranges[-1][1]
+    done = replace_range(spark, path, df, spec.filter_field, lo, hi, spec.partition_granularity)
     if log:
         log.info(
-            "load done: range_replace [%s, %s] -> %s", ranges[0][0], ranges[-1][1], path
+            "load done: range_replace [%s, %s] -> %s rows=%d partitions=%d secs=%.2f",
+            lo, hi, path, done.rows, done.partitions, time.perf_counter() - t0,
         )
     return path
 

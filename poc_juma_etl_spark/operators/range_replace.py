@@ -11,17 +11,27 @@ scales: only the partitions intersecting the range are rewritten, never the
 whole table.
 
 Tables written by this module are date-partitioned parquet directories
-(partition column ``p_date`` derived from the table's filter field), which is
-what makes range replacement a metadata-local operation at 100 TB. On a real
-cluster you'd put Delta/Iceberg underneath for snapshot isolation; the
-operator surface here stays identical.
+(partition column ``p_date`` derived from the table's filter field). A range
+replacement reads only what the range touches:
+
+- one driver-side directory listing (``list_partitions``, no Spark job)
+  names the partitions inside the range and tells a first load from a
+  refresh;
+- at month granularity, the touched partition directories alone are read
+  back for the rows to retain — partitions outside the range are never
+  opened;
+- one ``collect`` of per-partition counts gives the emptiness guard, the
+  partitions written and the log figures.
+
+On a real cluster you'd put Delta/Iceberg underneath for snapshot isolation;
+the operator surface here stays identical.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from typing import NamedTuple
 
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,15 +62,56 @@ def _partition_of(day: str, granularity: str) -> dt.date:
     return d if granularity == "day" else d.replace(day=1)
 
 
-def _delete_partitions(spark: SparkSession, path: str, parts: list) -> None:
-    """Remove partition directories via the Hadoop FileSystem API (works on
-    local FS, HDFS, and S3A alike — same code path a cluster uses)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    for p in parts:
-        ppath = jvm.org.apache.hadoop.fs.Path(f"{path}/{PARTITION_COL}={p}")
-        fs = ppath.getFileSystem(conf)
-        fs.delete(ppath, True)
+def _filesystem(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — the same API on local FS,
+    HDFS and S3A, so listing and deletes take a cluster's code path."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether anything was ever written at ``path`` (the S6 empty-guard
+    skips the write on empty input, leaving no directory at all)."""
+    fs, p = _filesystem(spark, path)
+    return fs.exists(p)
+
+
+def list_partitions(spark: SparkSession, path: str, col: str) -> dict:
+    """``{decoded partition value: FileStatus}`` for the ``col=<value>``
+    directories directly under ``path``, from one Hadoop ``listStatus`` — no
+    Spark job. Empty when the table does not exist.
+
+    Values are decoded with Spark's own inverse of the escaping it applies to
+    partition directory names (``1995-02-01 00%3A00%3A00`` is the TIMESTAMP
+    ``1995-02-01 00:00:00``); ``java.net.URLDecoder`` would also turn a
+    literal ``+`` into a space."""
+    fs, root = _filesystem(spark, path)
+    if not fs.exists(root):
+        return {}
+    catalog_utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    prefix = f"{col}="
+    parts = {}
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if name.startswith(prefix) and status.isDirectory():
+            parts[catalog_utils.unescapePathName(name[len(prefix):])] = status
+    return parts
+
+
+def partitions_between(parts: dict, start, end) -> dict:
+    """The listed partitions whose value falls on a day in ``[start, end]``.
+    DATE and TIMESTAMP partition values both begin with their ISO day, which
+    orders as a string; the null partition (``__HIVE_DEFAULT_PARTITION__``)
+    falls outside every range."""
+    lo, hi = (dt.date.fromisoformat(str(d)).isoformat() for d in (start, end))
+    return {v: s for v, s in parts.items() if lo <= v[:10] <= hi}
+
+
+def delete_listed(spark: SparkSession, statuses) -> None:
+    """Recursively delete listed partition directories by their own paths."""
+    for status in statuses:
+        path = status.getPath()
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
 
 
 def overwrite_table(
@@ -100,6 +151,14 @@ def append_table(
     w.parquet(path)
 
 
+class Replaced(NamedTuple):
+    """What one ``replace_range`` wrote: rows (new plus retained) and the
+    partitions they landed in. ``(0, 0)`` when nothing was written."""
+
+    rows: int
+    partitions: int
+
+
 def replace_range(
     spark: SparkSession,
     path: str,
@@ -108,7 +167,7 @@ def replace_range(
     start: str | dt.date,
     end: str | dt.date,
     granularity: str = "day",
-) -> None:
+) -> Replaced:
     """R1 — idempotent day-granular range replacement: after this call, the
     table's content for dates in ``[start, end]`` is exactly the in-range
     rows of ``new_rows`` (rows outside the range are ignored, mirroring the
@@ -121,55 +180,64 @@ def replace_range(
 
     With ``granularity="month"`` the day range need not align to partition
     boundaries: rows of the touched months *outside* the range are read
-    back and re-staged alongside the new rows (retain ∪ new), so the
-    overwrite of those months is still exact. The retained rows are
-    localCheckpoint'ed first — Spark refuses to overwrite a path it is
-    concurrently reading from lineage."""
+    back — from those months' directories only — and re-staged alongside
+    the new rows (retain ∪ new), so the overwrite of those months is still
+    exact. The retained rows are localCheckpoint'ed first — Spark refuses to
+    overwrite a path it is concurrently reading from lineage."""
     start_d = F.lit(str(start)).cast("date")
     end_d = F.lit(str(end)).cast("date")
     day_in_range = F.to_date(F.col(filter_field)).between(start_d, end_d)
-    staged = _with_partition(new_rows, filter_field, granularity).filter(day_in_range)
-    if staged.isEmpty():
+    staged = (
+        _with_partition(new_rows, filter_field, granularity)
+        .filter(day_in_range)
+        .withColumn("_is_new", F.lit(True))
+    )
+    # partitions the range *touches* in the existing table (none on a first
+    # load). Dynamic overwrite only rewrites partitions present in the staged
+    # data — a touched partition with no new (or retained) rows would keep
+    # stale in-range rows (caught by tests/test_property_range_replace.py),
+    # so those are deleted explicitly afterwards, mirroring the reference's
+    # DELETE of the full range (utils.py:266-269).
+    touched = partitions_between(
+        list_partitions(spark, path, PARTITION_COL),
+        _partition_of(str(start), granularity),
+        _partition_of(str(end), granularity),
+    )
+    if touched and granularity != "day":
+        # sub-partition replacement: keep touched-partition rows that fall
+        # outside the day range
+        existing = (
+            spark.read.option("basePath", path)
+            .parquet(*[s.getPath().toString() for s in touched.values()])
+            .drop(PARTITION_COL)
+        )
+        retained = (
+            _with_partition(existing, filter_field, granularity)
+            .filter(~day_in_range)
+            .withColumn("_is_new", F.lit(False))
+            .localCheckpoint()
+        )
+        staged = staged.unionByName(retained)
+    written = (
+        staged.groupBy(PARTITION_COL)
+        .agg(F.max("_is_new").alias("has_new"), F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    if not any(r.has_new for r in written):
         # The reference skips the delete when extraction returns no rows
         # (extract-before-delete ordering, utils.py:379-398): absence of new
         # data must never destroy existing data.
-        return
-    # partitions the range *touches* in the existing table. Dynamic overwrite
-    # only rewrites partitions present in the staged data — a touched
-    # partition with no new (or retained) rows would keep stale in-range rows
-    # (caught by tests/test_property_range_replace.py), so those are deleted
-    # explicitly afterwards, mirroring the reference's DELETE of the full
-    # range (utils.py:266-269).
-    affected_existing: list = []
-    try:
-        existing = _with_partition(
-            spark.read.parquet(path).drop(PARTITION_COL), filter_field, granularity
-        )
-        part_start = _partition_of(str(start), granularity)
-        part_end = _partition_of(str(end), granularity)
-        affected = existing.filter(
-            F.col(PARTITION_COL).between(F.lit(part_start), F.lit(part_end))
-        )
-        affected_existing = [
-            r[0] for r in affected.select(PARTITION_COL).distinct().collect()
-        ]
-        if granularity != "day":
-            # sub-partition replacement: keep affected-partition rows that
-            # fall outside the day range
-            retained = affected.filter(~day_in_range).localCheckpoint()
-            staged = staged.unionByName(retained)
-    except AnalysisException:
-        pass  # first load: nothing to retain or clear
+        return Replaced(0, 0)
     (
-        staged.write.mode("overwrite")
+        staged.drop("_is_new")
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(PARTITION_COL)
         .parquet(path)
     )
-    desired = {r[0] for r in staged.select(PARTITION_COL).distinct().collect()}
-    stale = [p for p in affected_existing if p not in desired]
-    if stale:
-        _delete_partitions(spark, path, stale)
+    desired = {str(r[PARTITION_COL]) for r in written}
+    delete_listed(spark, [s for p, s in touched.items() if p not in desired])
+    return Replaced(sum(r.n for r in written), len(written))
 
 
 def refresh_recent(
@@ -204,12 +272,9 @@ def read_table(
     empty-guard skips the write entirely on empty input) reads back as an
     empty frame with ``like``'s schema instead of PATH_NOT_FOUND — so
     empty-source pipelines produce empty results, not crashes."""
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException:
-        if like is None:
-            raise
+    if like is not None and not table_exists(spark, path):
         return spark.createDataFrame([], like.schema)
+    df = spark.read.parquet(path)
     for derived in (PARTITION_COL, "_epoch"):
         if derived in df.columns:
             df = df.drop(derived)
@@ -228,10 +293,9 @@ def delete_keys(spark: SparkSession, path: str, key: str, keys: DataFrame) -> No
     unless the table is partitioned by the key, so at 100 TB this is one
     full rewrite per erasure *batch* — which is why erasure requests are
     batched, exactly as the reference batches its range reloads."""
-    keyset = keys.select(key).distinct()
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException:
+    if not table_exists(spark, path):
         return  # never-written table (S6 empty-guard): nothing to delete
+    keyset = keys.select(key).distinct()
+    existing = spark.read.parquet(path)
     retained = existing.join(F.broadcast(keyset), key, "left_anti").localCheckpoint()
     retained.write.mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)

@@ -24,6 +24,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.range_replace import delete_listed, list_partitions, partitions_between
+
 
 @dataclass(frozen=True)
 class GoldSpec:
@@ -154,42 +156,29 @@ def refresh_incremental(
     the reference's full DROP+CTAS rebuild, materialize_gold.py:64-74).
 
     This is what makes the RAW→GOLD trigger affordable at 100 TB: a 7-day
-    refresh rewrites 7 partitions of the gold table, not 7 years. Requires
-    the spec's partition_field to be a DATE column (true of
-    vw_event_hourly; month-grained specs pass month-aligned ranges)."""
-    from pyspark.errors.exceptions.captured import AnalysisException
+    refresh rewrites 7 partitions of the gold table, not 7 years. The
+    partition field may be a DATE (``event_date``) or a TIMESTAMP
+    (``ship_month``, ``order_month``); a row is in range when its partition
+    value falls on a day in ``[start, end]``, so month-grained specs pass
+    month-aligned ranges.
 
+    The recomputation runs once: it is localCheckpoint'ed, and one distinct
+    ``collect`` over the checkpoint gives both the partitions to write and
+    the emptiness check. The gold partitions already on disk come from a
+    directory listing, not from reading the gold table."""
     spec = GOLD_SPECS[view]
     out = f"{warehouse_dir}/{spec.table}"
     pf = spec.partition_field
     in_range = F.col(pf).cast("date").between(F.lit(start), F.lit(end))
-    fresh = spark.table(view).filter(in_range)
-    if fresh.isEmpty():
+    fresh = spark.table(view).filter(in_range).localCheckpoint()
+    # partition values as Spark spells them in directory names
+    desired = {r[0] for r in fresh.select(F.col(pf).cast("string")).distinct().collect()}
+    if not desired:
         # same conservative stance as R1's extract-before-delete guard: an
         # entirely-empty recomputation never deletes existing gold data (a
         # broken upstream view must not wipe the range); full rebuilds via
         # materialize() are the path for intentional deletions
         return out
-    # one metadata job collects both partition-value sets (old in-range
-    # partitions on disk + partitions the recomputation produces) instead of
-    # two separate collects — the union's sides run inside a single action
-    new_parts = fresh.select(F.col(pf).alias("p")).distinct().withColumn(
-        "is_old", F.lit(False)
-    )
-    both = new_parts
-    try:
-        both = new_parts.unionByName(
-            spark.read.parquet(out)
-            .filter(in_range)
-            .select(F.col(pf).alias("p"))
-            .distinct()
-            .withColumn("is_old", F.lit(True))
-        )
-    except AnalysisException:
-        pass  # first build — nothing on disk yet
-    part_rows = both.collect()
-    desired = {r.p for r in part_rows if not r.is_old}
-    affected = [r.p for r in part_rows if r.is_old]
     if spec.cluster_fields:
         fresh = fresh.sortWithinPartitions(*[F.col(c) for c in spec.cluster_fields])
     (
@@ -198,12 +187,6 @@ def refresh_incremental(
         .partitionBy(pf)
         .parquet(out)
     )
-    stale = [p for p in affected if p not in desired]
-    if stale:
-        # gold partitions use the spec's own column name (not p_date)
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        for p in stale:
-            ppath = jvm.org.apache.hadoop.fs.Path(f"{out}/{pf}={p}")
-            ppath.getFileSystem(conf).delete(ppath, True)
+    listed = partitions_between(list_partitions(spark, out, pf), start, end)
+    delete_listed(spark, [s for p, s in listed.items() if p not in desired])
     return out

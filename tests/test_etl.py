@@ -3,6 +3,7 @@
 (S7/S8)."""
 
 import datetime as dt
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -236,7 +237,13 @@ def test_run_all_end_to_end(spark, tmp_path):
         # O9: one service log per table, containing the completion line
         log_file = logs / f"etl_{name}.log"
         assert log_file.exists(), f"missing service log for {name}"
-        assert "load done" in log_file.read_text()
+        done = re.search(r"load done: .*", log_file.read_text()).group(0)
+        assert re.search(r" secs=\d+\.\d\d$", done), done
+        if SERVICE_MAP[name].load_mode == "range_replace":
+            # the bootstrap writes every source row; no rows are retained
+            assert re.search(rf" rows={src.count()} partitions=[1-9]\d* ", done), done
+        else:
+            assert "rows=" not in done, done
     for view in TRIGGER_MAP.values():
         assert view in results
         assert spark.read.parquet(results[view]).count() > 0
